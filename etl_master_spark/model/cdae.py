@@ -7,8 +7,9 @@ Spark-first translation of the training loop:
 
 - The reference densifies the whole user×item matrix up front
   (``main_my.py:81-88`` — its scalability wall). Here a user's multi-hot row
-  exists ONLY inside an Arrow batch, rebuilt on the fly from item-index
-  arrays; nothing user×item-shaped ever materializes globally.
+  exists ONLY inside an Arrow batch, rebuilt on the fly from the user's
+  item ids through the driver-side item index (``item_index``); nothing
+  user×item-shaped ever materializes globally.
 - Each epoch, executors compute BCE partial gradients over their batches
   (numpy BLAS), the driver sums O(n_items×emb) blocks and steps, then
   re-broadcasts — the same partial-gradient loop as
@@ -32,7 +33,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.ranking import eval_from_scores
@@ -47,36 +48,40 @@ DROPOUT_NUM = 1  # keep prob = 1 - DROPOUT_NUM/DROPOUT_DEN
 DROPOUT_DEN = 4
 
 
+def item_index(
+    train: DataFrame, domains: tuple[str, ...] = ("x", "y")
+) -> dict[str, np.ndarray]:
+    """Dense item index per domain from ONE driver collect: each domain's
+    distinct train item ids, ascending, so item i's decoder column is its
+    position 0..n−1 (``np.searchsorted``). The weights are n_items × emb
+    on the driver already, so the index adds no new scale limit."""
+    got = {
+        r["domain"]: np.asarray(r["items"], dtype=np.int64)
+        for r in train.groupBy("domain")
+        .agg(F.sort_array(F.collect_set("item_id")).alias("items"))
+        .collect()
+    }
+    return {d: got.get(d, np.empty(0, dtype=np.int64)) for d in domains}
+
+
 def _train_frame(
     spark: SparkSession, sf_dir: str, domain: str
-) -> tuple[DataFrame, DataFrame, int]:
-    """(user_id, idxs ARRAY<INT>) over the train split + the dense item
-    index (item_id ↔ idx) used to address decoder columns."""
+) -> tuple[DataFrame, np.ndarray, int]:
+    """(user_id, items ARRAY<BIGINT>) over the train split + the dense item
+    index (``item_index``) that addresses decoder columns."""
     tr = splits(spark, sf_dir).filter(
         (F.col("split") == "train") & (F.col("domain") == domain)
     )
-    items = (
-        tr.select("item_id")
-        .distinct()
-        .withColumn(
-            "idx",
-            F.row_number().over(Window.orderBy("item_id")).cast("int") - 1,
-        )
-    )
-    per_user = (
-        tr.join(F.broadcast(items), "item_id")
-        .groupBy("user_id")
-        .agg(F.sort_array(F.collect_list("idx")).alias("idxs"))
-    )
-    n_items = items.count()
-    return per_user, items, n_items
+    items = item_index(tr, (domain,))[domain]
+    per_user = tr.groupBy("user_id").agg(F.collect_list("item_id").alias("items"))
+    return per_user, items, len(items)
 
 
-def _multi_hot(pdf: pd.DataFrame, n_items: int) -> tuple[np.ndarray, np.ndarray]:
+def _multi_hot(pdf: pd.DataFrame, items: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     users = pdf["user_id"].to_numpy(dtype="int64")
-    x = np.zeros((len(pdf), n_items), dtype=np.float64)
-    for row, idxs in enumerate(pdf["idxs"]):
-        x[row, np.asarray(idxs, dtype="int64")] = 1.0
+    x = np.zeros((len(pdf), len(items)), dtype=np.float64)
+    for row, ids in enumerate(pdf["items"]):
+        x[row, np.searchsorted(items, np.asarray(ids, dtype="int64"))] = 1.0
     return users, x
 
 
@@ -108,7 +113,7 @@ def train_cdae(
                 for pdf in batches:
                     if not len(pdf):
                         continue
-                    users, x = _multi_hot(pdf, n_items)
+                    users, x = _multi_hot(pdf, items)
                     # deterministic denoising mask: drop DROPOUT_NUM/DEN of
                     # each user's live inputs, independent of partitioning
                     h = (
@@ -158,7 +163,7 @@ def train_cdae(
         "W1": w1,
         "W2": w2,
         "items": items,
-        "per_user": _train_frame(spark, sf_dir, domain)[0],
+        "per_user": per_user,  # unpersisted: lazy again
         "n_items": n_items,
         "losses": losses,
     }
@@ -179,7 +184,7 @@ def cdae_user_embeddings(
     pass — never a driver-side matrix."""
     model = train_cdae(spark, sf_dir, domain, emb=emb, epochs=epochs, lr=lr,
                        seed=seed)
-    n_items = model["n_items"]
+    items = model["items"]
     bw = spark.sparkContext.broadcast(model["W1"])
 
     def latent(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -187,7 +192,7 @@ def cdae_user_embeddings(
         for pdf in batches:
             if not len(pdf):
                 continue
-            users, x = _multi_hot(pdf, n_items)
+            users, x = _multi_hot(pdf, items)
             z = np.maximum(x @ p1, 0.0)
             yield pd.DataFrame({"user_id": users, "embedding": z.tolist()})
 
@@ -216,7 +221,7 @@ def cdae_scores_with(
 ) -> DataFrame:
     """Score candidate pairs from an in-hand model dict (live-trained or
     checkpoint-reloaded) — the shared scoring half of ``cdae_scores``."""
-    n_items = model["n_items"]
+    items = model["items"]
     bw = spark.sparkContext.broadcast(model["W1"])
 
     def latent(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -224,17 +229,14 @@ def cdae_scores_with(
         for pdf in batches:
             if not len(pdf):
                 continue
-            users, x = _multi_hot(pdf, n_items)
+            users, x = _multi_hot(pdf, items)
             z = np.maximum(x @ p1, 0.0)
             yield pd.DataFrame({"user_id": users, "z": z.tolist()})
 
     z_df = model["per_user"].mapInPandas(latent, "user_id long, z array<double>")
     w2 = model["W2"]
-    dec_rows = [
-        (int(r["item_id"]), int(r["idx"])) for r in model["items"].collect()
-    ]
     dec = spark.createDataFrame(
-        [(item, w2[:, idx].tolist()) for item, idx in dec_rows],
+        [(int(item), w2[:, idx].tolist()) for idx, item in enumerate(items)],
         "item_id long, w_out array<double>",
     )
     neg = negatives(spark, sf_dir).filter(F.col("domain") == domain)

@@ -21,7 +21,8 @@ Spark-first translation (same pattern as ``cdae.train_cdae`` /
 ``crossdomain.fit_mlp_map``):
 
 - nothing user×item-shaped ever materializes globally: each Arrow batch
-  rebuilds its users' multi-hot rows from item-index arrays
+  rebuilds its users' multi-hot rows from their item ids, addressed
+  through the driver-side item index
 - each pass, executors compute exact partial gradients over their batches
   (numpy BLAS); the driver sums O(params)-sized blocks and steps, then
   re-broadcasts — full-batch GD, deterministic on any partitioning
@@ -34,11 +35,27 @@ Spark-first translation (same pattern as ``cdae.train_cdae`` /
 
 All forward/gradient math lives in pure numpy functions (`_g_forward`,
 `_g_grads`, `_d_grads`) that tests pin with finite-difference gradchecks.
+
+Inputs are built ONCE per public call (``_inputs``): one seeded-shuffle
+frame per (user, domain) feeds the training frame, the negatives and the
+vali/test holdouts, and the dense item index (item_id → 0..n−1 in item_id
+order) comes from one driver collect for both domains. At these sizes the
+lifecycle's cost is Spark's fixed per-job overhead, not compute, so every
+re-derivation of the same small subtree is pure loss. Cache lifetime rule:
+whatever a call persists it fills itself, before any frame reading that
+cache leaves the call, and unpersists in a ``finally`` before it returns
+(``train_gan``, ``gan_eval_with``, ``gan_eval_frozen``); lazily returned
+frames (``gan_scores``, ``gan_user_embeddings``, the checkpoint re-eval)
+derive from the parquet and hold no cache. So a caller that forces a
+returned frame early (a tracer's count) never fills a cache on the
+program's behalf, and the program runs the same jobs either way.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
+from contextlib import contextmanager, nullcontext
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
@@ -46,8 +63,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.ranking import eval_from_scores
-from ..operators.recsplit import negatives, splits
-from .cdae import DROPOUT_DEN, DROPOUT_NUM, _train_frame
+# splits/negatives stay importable as gan.splits/gan.negatives:
+# perfbench's traced run wraps them by name
+from ..operators.recsplit import (  # noqa: F401
+    _shuffled_items,
+    negatives,
+    negatives_from_shuffled,
+    splits,
+    splits_from_shuffled,
+)
+from ..sources.io import ratings
+from .cdae import DROPOUT_DEN, DROPOUT_NUM, item_index
 from .reduce import tree_collect
 
 EMB = 16
@@ -323,51 +349,106 @@ def _d_grads(
     return grads, d_loss
 
 
+# -- inputs: one derivation of the ratings per public call --------------------
+
+@dataclass(frozen=True)
+class _Inputs:
+    """Everything the lifecycle reads, derived from ONE seeded-shuffle frame
+    (``su``, ``recsplit._shuffled_items``): the splits, the negatives and
+    the training frame (user_id, items_x, items_y) all reuse its single
+    groupBy — the ``ranking.candidate_scores`` pattern. The training frame
+    is the union of both domains' train users (full outer join: a user
+    absent from one domain has an empty array there, exactly a zero
+    multi-hot) and carries raw item ids; ``_two_hot`` maps them onto the
+    driver-side item index."""
+
+    su: DataFrame
+    splits: DataFrame
+    negatives: DataFrame
+    frame: DataFrame
+
+    def holdout(self, mode: str) -> DataFrame:
+        return self.splits.filter(F.col("split") == mode).select(
+            "user_id", "item_id", "domain"
+        )
+
+    def train(self) -> DataFrame:
+        return self.splits.filter(F.col("split") == "train")
+
+
+def _inputs(spark: SparkSession, sf_dir: str) -> _Inputs:
+    """Lazy inputs: nothing cached, so a frame built on them and handed
+    back to the caller recomputes from the parquet."""
+    su = _shuffled_items(ratings(spark, sf_dir))
+    sp = splits_from_shuffled(su)
+    tr = sp.filter(F.col("split") == "train")
+    px, py = (
+        tr.filter(F.col("domain") == d)
+        .groupBy("user_id")
+        .agg(F.collect_list("item_id").alias(f"items_{d}"))
+        for d in ("x", "y")
+    )
+    empty = F.array().cast("array<bigint>")
+    frame = px.join(py, "user_id", "full_outer").select(
+        "user_id",
+        F.coalesce("items_x", empty).alias("items_x"),
+        F.coalesce("items_y", empty).alias("items_y"),
+    )
+    return _Inputs(su, sp, negatives_from_shuffled(su), frame)
+
+
+@contextmanager
+def _cached_inputs(spark: SparkSession, sf_dir: str) -> Iterator[_Inputs]:
+    """``_inputs`` with the shuffle frame and the training frame cached
+    for the ``with`` block and released when it exits. ``su`` is cached
+    first, so the training frame builds on its cache; training fills both
+    (the item-index collect, then the first pass) before anything else
+    reads them."""
+    inp = _inputs(spark, sf_dir)
+    cached = (inp.su, inp.frame)
+    try:
+        for df in cached:
+            df.persist()
+        yield inp
+    finally:
+        for df in cached:
+            df.unpersist()
+
+
+def _local(df: DataFrame) -> DataFrame:
+    """A small result collected into a frame of its own, free of any cache
+    it was computed from."""
+    return df.sparkSession.createDataFrame(df.collect(), df.schema)
+
+
 # -- distributed training loop ------------------------------------------------
 
-def _joined_frame(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame, DataFrame, int, int]:
-    """(user_id, idxs_x, idxs_y) over the union of both domains' train
-    users (full outer join — a user absent from one domain has an empty
-    row there, exactly a zero multi-hot), plus both item indices."""
-    px, items_x, n_x = _train_frame(spark, sf_dir, "x")
-    py, items_y, n_y = _train_frame(spark, sf_dir, "y")
-    empty = F.array().cast("array<int>")
-    joined = (
-        px.withColumnsRenamed({"idxs": "idxs_x"})
-        .join(py.withColumnsRenamed({"idxs": "idxs_y"}), "user_id", "full_outer")
-        .select(
-            "user_id",
-            F.coalesce("idxs_x", empty).alias("idxs_x"),
-            F.coalesce("idxs_y", empty).alias("idxs_y"),
-        )
-    )
-    return joined, items_x, items_y, n_x, n_y
-
-
 def _two_hot(
-    pdf: pd.DataFrame, n_x: int, n_y: int
+    pdf: pd.DataFrame, items_x: np.ndarray, items_y: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     users = pdf["user_id"].to_numpy(dtype="int64")
-    x = np.zeros((len(pdf), n_x), dtype=np.float64)
-    y = np.zeros((len(pdf), n_y), dtype=np.float64)
-    for row, (ix, iy) in enumerate(zip(pdf["idxs_x"], pdf["idxs_y"])):
-        x[row, np.asarray(ix, dtype="int64")] = 1.0
-        y[row, np.asarray(iy, dtype="int64")] = 1.0
+    x = np.zeros((len(pdf), len(items_x)), dtype=np.float64)
+    y = np.zeros((len(pdf), len(items_y)), dtype=np.float64)
+    for row, (ix, iy) in enumerate(zip(pdf["items_x"], pdf["items_y"])):
+        x[row, np.searchsorted(items_x, np.asarray(ix, dtype="int64"))] = 1.0
+        y[row, np.searchsorted(items_y, np.asarray(iy, dtype="int64"))] = 1.0
     return users, x, y
 
 
 def _g_schema(g: dict) -> str:
     """Partial-gradient transport schema — one array column per G param
-    (the param set depends on the map strategy) + the loss scalars."""
-    return ", ".join(f"{k} array<double>" for k in g) + ", loss double, gan double"
+    (the param set depends on the map strategy) + the loss scalars and the
+    partition's user count."""
+    return (
+        ", ".join(f"{k} array<double>" for k in g)
+        + ", loss double, gan double, n long"
+    )
 
 
 _D_SCHEMA = (
     "v1x array<double>, b1x array<double>, v2x array<double>, b2x array<double>, "
     "v1y array<double>, b1y array<double>, v2y array<double>, b2y array<double>, "
-    "loss double"
+    "loss double, n long"
 )
 
 
@@ -383,6 +464,7 @@ def train_gan(
     optimizer: str = "gd",
     wd: float = WEIGHT_DECAY,
     prior: str = "gaussian",
+    inputs: _Inputs | None = None,
 ) -> dict:
     """``optimizer``: "gd" (default) is plain full-batch gradient descent
     with split G/D rates — chosen for the engine's short pass budget,
@@ -390,19 +472,26 @@ def train_gan(
     T11 pair exactly (main_my.py:113-114): Adam moments + weight decay
     for the generator, SGD + weight decay for the discriminators, all
     state driver-side over the collected partial gradients — equally
-    deterministic (full-batch, seeded)."""
-    joined, items_x, items_y, n_x, n_y = _joined_frame(spark, sf_dir)
-    joined = joined.persist()
-    n_users = joined.count()
-    g, d = init_params(n_x, n_y, emb, seed, strategy=strategy)
-    if optimizer == "adam":
-        adam_m = {k: np.zeros_like(v) for k, v in g.items()}
-        adam_v = {k: np.zeros_like(v) for k, v in g.items()}
-        adam_t = 0
-    g_losses: list[float] = []
-    gan_losses: list[float] = []
-    d_losses: list[float] = []
-    try:
+    deterministic (full-batch, seeded).
+
+    ``inputs``: the caller's ``_cached_inputs`` to train on (the caller
+    owns their cache); without them the call caches its own for its
+    duration."""
+    with (
+        nullcontext(inputs) if inputs is not None
+        else _cached_inputs(spark, sf_dir)
+    ) as inp:
+        items = item_index(inp.train())
+        items_x, items_y = items["x"], items["y"]
+        n_x, n_y = len(items_x), len(items_y)
+        g, d = init_params(n_x, n_y, emb, seed, strategy=strategy)
+        if optimizer == "adam":
+            adam_m = {k: np.zeros_like(v) for k, v in g.items()}
+            adam_v = {k: np.zeros_like(v) for k, v in g.items()}
+            adam_t = 0
+        g_losses: list[float] = []
+        gan_losses: list[float] = []
+        d_losses: list[float] = []
         for p in range(passes):
             is_d = (p + 1) % D_EVERY == 0  # G,G,D — d_epoch=2 schedule
             bp = spark.sparkContext.broadcast({"g": g, "d": d})
@@ -412,22 +501,25 @@ def train_gan(
                     bg, bd = bp.value["g"], bp.value["d"]
                     acc = {k: np.zeros_like(v) for k, v in bd.items()}
                     loss = 0.0
+                    n = 0
                     for pdf in batches:
                         if not len(pdf):
                             continue
-                        users, x, y = _two_hot(pdf, n_x, n_y)
+                        users, x, y = _two_hot(pdf, items_x, items_y)
                         xn = np.where(_dropout_mask(users, n_x, p), 0.0, x)
                         yn = np.where(_dropout_mask(users, n_y, p), 0.0, y)
                         gr, ls = _d_grads(users, xn, yn, bg, bd, p, prior_kind=prior)
                         for k in acc:
                             acc[k] += gr[k]
                         loss += ls
+                        n += len(pdf)
                     yield pd.DataFrame(
                         {**{k: [v.ravel().tolist()] for k, v in acc.items()},
-                         "loss": [loss]}
+                         "loss": [loss], "n": [n]}
                     )
 
-                parts = tree_collect(joined.mapInPandas(dpart, _D_SCHEMA))
+                parts = tree_collect(inp.frame.mapInPandas(dpart, _D_SCHEMA))
+                n_users = sum(r["n"] for r in parts)
                 for k in d:
                     tot = sum(np.array(r[k]) for r in parts).reshape(d[k].shape)
                     grad = tot / n_users
@@ -441,10 +533,11 @@ def train_gan(
                     acc = {k: np.zeros_like(v) for k, v in bg.items()}
                     loss = 0.0
                     gan = 0.0
+                    n = 0
                     for pdf in batches:
                         if not len(pdf):
                             continue
-                        users, x, y = _two_hot(pdf, n_x, n_y)
+                        users, x, y = _two_hot(pdf, items_x, items_y)
                         xn = np.where(_dropout_mask(users, n_x, p), 0.0, x)
                         yn = np.where(_dropout_mask(users, n_y, p), 0.0, y)
                         gr, ls = _g_grads(xn, x, yn, y, bg, bd)
@@ -452,12 +545,14 @@ def train_gan(
                             acc[k] += gr[k]
                         loss += ls["total"]
                         gan += ls["gan"]
+                        n += len(pdf)
                     yield pd.DataFrame(
                         {**{k: [v.ravel().tolist()] for k, v in acc.items()},
-                         "loss": [loss], "gan": [gan]}
+                         "loss": [loss], "gan": [gan], "n": [n]}
                     )
 
-                parts = tree_collect(joined.mapInPandas(gpart, _g_schema(g)))
+                parts = tree_collect(inp.frame.mapInPandas(gpart, _g_schema(g)))
+                n_users = sum(r["n"] for r in parts)
                 if optimizer == "adam":
                     adam_t += 1
                 for k in g:
@@ -479,8 +574,6 @@ def train_gan(
                 g_losses.append(sum(r["loss"] for r in parts) / n_users)
                 gan_losses.append(sum(r["gan"] for r in parts) / n_users)
             bp.unpersist()
-    finally:
-        joined.unpersist()
     return {
         "g": g, "d": d,
         "items_x": items_x, "items_y": items_y,
@@ -491,12 +584,20 @@ def train_gan(
 
 # -- scoring / evaluation -----------------------------------------------------
 
-def gan_scores(spark: SparkSession, sf_dir: str, model: dict | None = None) -> DataFrame:
+def gan_scores(
+    spark: SparkSession,
+    sf_dir: str,
+    model: dict | None = None,
+    inputs: _Inputs | None = None,
+) -> DataFrame:
     """(user_id, item_id, domain, score) for candidate pairs only — the
     join-first scoring shape shared with cdae_scores, but from ONE coupled
-    training run covering both domains."""
+    training run covering both domains. Candidates are every user's
+    negatives plus their vali and test items. Without ``inputs`` the
+    result derives lazily from the parquet."""
     model = model or train_gan(spark, sf_dir)
-    joined, _, _, n_x, n_y = _joined_frame(spark, sf_dir)
+    inp = inputs or _inputs(spark, sf_dir)
+    items_x, items_y = model["items_x"], model["items_y"]
     bw = spark.sparkContext.broadcast((model["g"]["w1x"], model["g"]["w1y"]))
 
     def latent(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -504,54 +605,45 @@ def gan_scores(spark: SparkSession, sf_dir: str, model: dict | None = None) -> D
         for pdf in batches:
             if not len(pdf):
                 continue
-            users, x, y = _two_hot(pdf, n_x, n_y)
+            users, x, y = _two_hot(pdf, items_x, items_y)
             zx = np.maximum(x @ w1x, 0.0)
             zy = np.maximum(y @ w1y, 0.0)
-            yield pd.DataFrame(
-                {"user_id": users, "zx": zx.tolist(), "zy": zy.tolist()}
-            )
+            yield pd.DataFrame({
+                "user_id": np.concatenate([users, users]),
+                "domain": ["x"] * len(users) + ["y"] * len(users),
+                "z": zx.tolist() + zy.tolist(),
+            })
 
-    z_df = joined.mapInPandas(
-        latent, "user_id long, zx array<double>, zy array<double>"
+    z_df = inp.frame.mapInPandas(
+        latent, "user_id long, domain string, z array<double>"
     )
-    out = []
-    for domain, items_key, w2_key, z_col in (
-        ("x", "items_x", "w2x", "zx"),
-        ("y", "items_y", "w2y", "zy"),
-    ):
-        w2 = model["g"][w2_key]
-        dec = spark.createDataFrame(
-            [
-                (int(r["item_id"]), w2[:, int(r["idx"])].tolist())
-                for r in model[items_key].collect()
-            ],
-            "item_id long, w_out array<double>",
-        )
-        neg = negatives(spark, sf_dir).filter(F.col("domain") == domain)
-        hold = splits(spark, sf_dir).filter(
-            F.col("split").isin("vali", "test") & (F.col("domain") == domain)
-        )
-        cand = (
-            neg.select("user_id", "item_id")
-            .unionByName(hold.select("user_id", "item_id"))
-            .distinct()
-        )
-        dot = F.aggregate(
-            F.zip_with(z_col, "w_out", lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        out.append(
-            cand.join(z_df.select("user_id", z_col), "user_id")
-            .join(F.broadcast(dec), "item_id")
-            .select(
-                "user_id",
-                "item_id",
-                F.lit(domain).alias("domain"),
-                dot.alias("score"),
+    dec = spark.createDataFrame(
+        [
+            (domain, int(item), model["g"][f"w2{domain}"][:, idx].tolist())
+            for domain, items in (("x", items_x), ("y", items_y))
+            for idx, item in enumerate(items)
+        ],
+        "domain string, item_id long, w_out array<double>",
+    )
+    cand = (
+        inp.negatives.select("user_id", "item_id", "domain")
+        .unionByName(
+            inp.splits.filter(F.col("split").isin("vali", "test")).select(
+                "user_id", "item_id", "domain"
             )
         )
-    return out[0].unionByName(out[1])
+        .distinct()
+    )
+    dot = F.aggregate(
+        F.zip_with("z", "w_out", lambda a, b: a * b),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+    return (
+        cand.join(z_df, ["user_id", "domain"])
+        .join(F.broadcast(dec), ["domain", "item_id"])
+        .select("user_id", "item_id", "domain", dot.alias("score"))
+    )
 
 
 # -- checkpoint lifecycle (S4/R7 — reference torch.save/load of the best
@@ -578,19 +670,19 @@ def load_gan_checkpoint(
     spark: SparkSession, sf_dir: str, ckpt_dir: str
 ) -> dict:
     """Rebuild a scoring-ready model dict from a saved checkpoint: numpy
-    params from parquet, item-index frames re-derived from the tables
-    (they are data, not model state)."""
+    params from parquet, the item index re-derived from the tables (it is
+    data, not model state)."""
     g: dict = {}
     d: dict = {}
     for r in spark.read.parquet(f"{ckpt_dir}/gan_params").collect():
         side, key = r["name"].split(".", 1)
         arr = np.array(r["data"], dtype=np.float64).reshape(tuple(r["shape"]))
         (g if side == "g" else d)[key] = arr
-    _, items_x, items_y, n_x, n_y = _joined_frame(spark, sf_dir)
+    items = item_index(_inputs(spark, sf_dir).train())
     return {
         "g": g, "d": d,
-        "items_x": items_x, "items_y": items_y,
-        "n_items_x": n_x, "n_items_y": n_y,
+        "items_x": items["x"], "items_y": items["y"],
+        "n_items_x": len(items["x"]), "n_items_y": len(items["y"]),
     }
 
 
@@ -605,10 +697,11 @@ def gan_reeval_from_checkpoint(
     the eval protocol — must reproduce the live model's metrics exactly
     (pinned in tests/test_model.py)."""
     model = load_gan_checkpoint(spark, sf_dir, ckpt_dir)
-    scores = gan_scores(spark, sf_dir, model)
-    sp = splits(spark, sf_dir)
-    hold = sp.filter(F.col("split") == mode).select("user_id", "item_id", "domain")
-    return eval_from_scores(scores, hold, negatives(spark, sf_dir), ks=ks)
+    inp = _inputs(spark, sf_dir)
+    return eval_from_scores(
+        gan_scores(spark, sf_dir, model, inp), inp.holdout(mode), inp.negatives,
+        ks=ks,
+    )
 
 
 def gan_eval(spark: SparkSession, sf_dir: str, mode: str = "test") -> DataFrame:
@@ -625,21 +718,21 @@ def gan_eval_frozen(
     parquet and the eval half — the same rank→HR/NDCG/MRR pipeline as
     ``eval_metrics`` — runs FROM the frozen copies, which the DuckDB
     oracle replays byte-identically (``frozen_eval_oracle('gan_test')``).
-    Training is seeded full-batch GD, so the artifacts are stable."""
+    Training is seeded full-batch GD, so the artifacts are stable. The
+    returned frame reads only the frozen parquet, so the inputs' cache
+    ends with this call."""
     from ..operators.ranking import freeze_and_eval
 
-    model = train_gan(spark, sf_dir)
-    scores = gan_scores(spark, sf_dir, model)
-    sp = splits(spark, sf_dir)
-    hold = sp.filter(F.col("split") == mode).select("user_id", "item_id", "domain")
-    negs = negatives(spark, sf_dir)
-    return freeze_and_eval(
-        scores, hold, negs, f"gan_{mode}", sf_dir,
-        fingerprint=(
-            f"gan:v1:emb={EMB},passes={PASSES},lr={LR},lr_d={LR_D},"
-            f"seed={SEED},optimizer=gd,prior=gaussian"
-        ),
-    )
+    with _cached_inputs(spark, sf_dir) as inp:
+        model = train_gan(spark, sf_dir, inputs=inp)
+        return freeze_and_eval(
+            gan_scores(spark, sf_dir, model, inp), inp.holdout(mode),
+            inp.negatives, f"gan_{mode}", sf_dir,
+            fingerprint=(
+                f"gan:v1:emb={EMB},passes={PASSES},lr={LR},lr_d={LR_D},"
+                f"seed={SEED},optimizer=gd,prior=gaussian"
+            ),
+        )
 
 
 def gan_eval_with(
@@ -657,23 +750,31 @@ def gan_eval_with(
     """Train the coupled model ONCE, evaluate every requested mode — the
     CLI's --model gan entry point (one training run for vali+test, like
     the reference's single loop evaluating both). ``optimizer``/``prior``
-    thread the T11 pair and the prior menu through from the CLI."""
-    model = train_gan(spark, sf_dir, emb=emb, passes=passes, lr=lr, seed=seed,
-                      optimizer=optimizer, prior=prior)
-    scores = gan_scores(spark, sf_dir, model)
-    sp = splits(spark, sf_dir)
-    negs = negatives(spark, sf_dir)
-    return {
-        mode: eval_from_scores(
-            scores,
-            sp.filter(F.col("split") == mode).select(
-                "user_id", "item_id", "domain"
-            ),
-            negs,
-            ks=ks,
-        )
-        for mode in modes
-    }
+    thread the T11 pair and the prior menu through from the CLI.
+
+    The inputs are built once: one cached shuffle frame feeds the
+    training frame (cached, shared by every training pass and by the
+    scoring), the negatives and the holdouts; the candidate scores are
+    computed and cached once for every mode. Every cache is released before the call
+    returns, so each mode's metrics come back collected, in a frame of
+    their own."""
+    with _cached_inputs(spark, sf_dir) as inp:
+        model = train_gan(spark, sf_dir, emb=emb, passes=passes, lr=lr,
+                          seed=seed, optimizer=optimizer, prior=prior,
+                          inputs=inp)
+        scores = gan_scores(spark, sf_dir, model, inp).persist()
+        try:
+            # fill the cache here, so every mode (and any wrapper that
+            # forces a mode's frame) reads the same computed scores
+            scores.count()
+            return {
+                mode: _local(
+                    eval_from_scores(scores, inp.holdout(mode), inp.negatives, ks=ks)
+                )
+                for mode in modes
+            }
+        finally:
+            scores.unpersist()
 
 
 def gan_user_embeddings(
@@ -687,9 +788,11 @@ def gan_user_embeddings(
 ) -> DataFrame:
     """S5/S6 export with the GAN-trained latent z for one domain —
     (user_id, embedding ARRAY<DOUBLE>), Arrow-batched, never a driver
-    matrix (reference ``save_embedding_process``, model_my.py:111-145)."""
+    matrix (reference ``save_embedding_process``, model_my.py:111-145).
+    Training caches and releases its own inputs; the returned frame
+    derives lazily from the parquet."""
     model = train_gan(spark, sf_dir, emb=emb, passes=passes, lr=lr, seed=seed)
-    joined, _, _, n_x, n_y = _joined_frame(spark, sf_dir)
+    items_x, items_y = model["items_x"], model["items_y"]
     w1 = model["g"]["w1x" if domain == "x" else "w1y"]
     bw = spark.sparkContext.broadcast(w1)
 
@@ -697,8 +800,10 @@ def gan_user_embeddings(
         for pdf in batches:
             if not len(pdf):
                 continue
-            users, x, y = _two_hot(pdf, n_x, n_y)
+            users, x, y = _two_hot(pdf, items_x, items_y)
             z = np.maximum((x if domain == "x" else y) @ bw.value, 0.0)
             yield pd.DataFrame({"user_id": users, "embedding": z.tolist()})
 
-    return joined.mapInPandas(latent, "user_id long, embedding array<double>")
+    return _inputs(spark, sf_dir).frame.mapInPandas(
+        latent, "user_id long, embedding array<double>"
+    )

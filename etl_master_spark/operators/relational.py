@@ -67,10 +67,15 @@ ORDER BY l_returnflag, l_linestatus
 
 # -- TPC-H Q3 flavor: shipping priority -------------------------------------
 
+CENTS = "decimal(15,2)"  # exact money: TPC-H prices and discounts are cents
+
+
 def shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Three-way join + agg + deterministic top-10. customer filter prunes
     before the join; join order lets AQE pick broadcast for the filtered
-    customer side."""
+    customer side. Revenue sums in exact DECIMAL (prices and discounts are
+    cents), so a half-cent total rounds the same in every engine; it comes
+    back as a double."""
     cust = load_table(spark, sf_dir, "customer").filter(
         F.col("c_mktsegment") == "BUILDING"
     )
@@ -80,12 +85,14 @@ def shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") > F.lit("1998-03-15")
     )
-    revenue = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
+    revenue = F.col("l_extendedprice").cast(CENTS) * (
+        F.lit(1) - F.col("l_discount").cast(CENTS)
+    )
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(cust, orders.o_custkey == cust.c_custkey)
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(F.round(F.sum(revenue), 2).alias("revenue"))
+        .agg(F.round(F.sum(revenue), 2).cast("double").alias("revenue"))
         .select(
             "l_orderkey",
             F.col("o_orderdate").cast("date").cast("string").alias("orderdate"),
@@ -101,7 +108,9 @@ SHIPPING_PRIORITY_ORACLE = """
 SELECT l_orderkey,
        CAST(CAST(o_orderdate AS DATE) AS VARCHAR) AS orderdate,
        o_orderpriority,
-       ROUND(SUM(l_extendedprice * (1.0 - l_discount)), 2) AS revenue
+       CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(15,2))
+                      * (1 - CAST(l_discount AS DECIMAL(15,2)))), 2)
+            AS DOUBLE) AS revenue
 FROM lineitem
 JOIN orders ON l_orderkey = o_orderkey
 JOIN customer ON o_custkey = c_custkey

@@ -44,6 +44,23 @@ def ensure_package_shipped(spark: SparkSession) -> None:
     _SHIPPED_SESSIONS.add(key)
 
 
+MAX_DRIVER_MEM_GIB = 48
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Half the machine's memory, capped at ``MAX_DRIVER_MEM_GIB``: the
+    heap, the JVM's off-heap and the Python workers must fit side by side
+    (a fixed heap larger than the machine lets the JVM grow until the
+    kernel kills it). Falls back to the cap where ``/proc/meminfo`` is
+    unreadable."""
+    try:
+        with open(meminfo) as f:
+            kib = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return f"{MAX_DRIVER_MEM_GIB}g"
+    return f"{max(1, min(kib // 2 // 1024, MAX_DRIVER_MEM_GIB * 1024))}m"
+
+
 def get_spark(
     app_name: str = "etl_master_spark",
     master: str | None = None,
@@ -74,9 +91,12 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
         # local-mode driver heap IS the executor heap: size it like an
-        # executor (the brief's box has 128 GiB; a 1000-executor cluster
-        # would get this per-executor via spark-submit instead)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        # executor (a 1000-executor cluster would get this per-executor
+        # via spark-submit instead)
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         # one BLAS thread per Python worker: the worker pool already fills
         # every core, so nested BLAS threading only adds contention (the
         # standard per-core-slot pinning on a real cluster)

@@ -666,3 +666,114 @@ def test_media_decode_header_edge_cases():
         + struct.pack("<IiiHHIIiiII", 40, 4, 0, 1, 24, 0, 0, 2835, 2835, 0, 0)
     )
     assert multimodal._decode_uncompressed(payload) is None
+
+
+# gan_eval_with(passes=3) at sf0.001, both modes collected, in this suite's
+# session: jobs run by the implementation that re-derived the ratings for
+# every split, negatives, item-index and scoring use
+GAN_EVAL_JOBS_BEFORE = 128
+# the same call's metrics before that change: the inputs are built once now,
+# but every number must stay bit-identical
+GAN_EVAL_METRICS = {
+    "vali": [
+        ("x", 5, 15, 0.0, 0.0, 0.0),
+        ("x", 10, 15, 0.066667, 0.020069, 0.007407),
+        ("y", 5, 15, 0.066667, 0.033333, 0.022222),
+        ("y", 10, 15, 0.066667, 0.033333, 0.022222),
+    ],
+    "test": [
+        ("x", 5, 15, 0.066667, 0.028712, 0.016667),
+        ("x", 10, 15, 0.133333, 0.04878, 0.024074),
+        ("y", 5, 15, 0.0, 0.0, 0.0),
+        ("y", 10, 15, 0.066667, 0.019271, 0.006667),
+    ],
+}
+
+
+def test_gan_eval_with_matches_its_parts(spark, sf_dir, monkeypatch):
+    """gan_eval_with trains once on the inputs it builds once: its params
+    are bit-identical to a standalone train_gan, and each mode's metrics
+    equal eval_from_scores over gan_scores, the split's holdout and the
+    negatives, each derived on its own."""
+    from etl_master_spark.model import gan
+    from etl_master_spark.operators.ranking import eval_from_scores
+    from etl_master_spark.operators.recsplit import negatives, splits
+
+    train = gan.train_gan
+    trained = []
+
+    def recording(*a, **kw):
+        trained.append(train(*a, **kw))
+        return trained[-1]
+
+    monkeypatch.setattr(gan, "train_gan", recording)
+    got = {m: [tuple(r) for r in df.collect()]
+           for m, df in gan.gan_eval_with(spark, sf_dir, passes=3).items()}
+    assert len(trained) == 1
+    alone = train(spark, sf_dir, passes=3)
+    for side in ("g", "d"):
+        assert set(trained[0][side]) == set(alone[side])
+        for k, v in alone[side].items():
+            assert np.array_equal(trained[0][side][k], v), (side, k)
+    scores = gan.gan_scores(spark, sf_dir, alone)
+    sp = splits(spark, sf_dir)
+    for mode in ("vali", "test"):
+        hold = sp.filter(F.col("split") == mode).select("user_id", "item_id", "domain")
+        want = eval_from_scores(scores, hold, negatives(spark, sf_dir)).collect()
+        assert got[mode] == [tuple(r) for r in want], mode
+    assert got == GAN_EVAL_METRICS
+
+
+def test_gan_calls_release_their_caches(spark, sf_dir):
+    """No cache outlives train_gan, gan_eval_with or gan_user_embeddings,
+    and the embedding frame handed back still computes (lazily, from the
+    parquet)."""
+    from etl_master_spark.model import gan
+
+    def cached() -> int:
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    before = cached()
+    gan.train_gan(spark, sf_dir, passes=1)
+    assert cached() == before
+    frames = gan.gan_eval_with(spark, sf_dir, passes=1)
+    assert cached() == before
+    assert all(len(df.collect()) == 4 for df in frames.values())
+    emb = gan.gan_user_embeddings(spark, sf_dir, passes=1)
+    assert cached() == before
+    rows = emb.collect()
+    assert rows and all(len(r["embedding"]) == gan.EMB for r in rows)
+    assert cached() == before
+
+
+def test_gan_eval_with_runs_under_half_the_jobs(spark, sf_dir):
+    """Job-count guard for the build-once inputs: the jobs gan_eval_with
+    triggers, counted by job group, stay under half the count before."""
+    from etl_master_spark.model import gan
+
+    sc = spark.sparkContext
+    group = "test-gan-eval-jobs"
+    sc.setJobGroup(group, "gan_eval_with job count")
+    try:
+        for df in gan.gan_eval_with(spark, sf_dir, passes=3).values():
+            df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < jobs < GAN_EVAL_JOBS_BEFORE / 2, jobs
+
+
+def test_cdae_eval_unchanged_by_driver_side_item_index(spark, sf_dir):
+    """CDAE addresses decoder columns through the shared driver-side item
+    index (cdae.item_index); its metrics are the ones the window-numbered
+    index gave."""
+    from etl_master_spark.model import cdae
+
+    got = [tuple(r) for r in cdae.cdae_eval(spark, sf_dir, "test", epochs=3).collect()]
+    assert got == [
+        ("x", 5, 15, 0.0, 0.0, 0.0),
+        ("x", 10, 15, 0.066667, 0.021031, 0.008333),
+        ("y", 5, 15, 0.066667, 0.066667, 0.066667),
+        ("y", 10, 15, 0.2, 0.109685, 0.084444),
+    ]

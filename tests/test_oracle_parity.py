@@ -58,3 +58,32 @@ def test_oracle_parity(spark, con, name):
 def test_rows_only_runs(spark, name):
     df = QUERIES[name](spark, SF)
     assert df.count() >= 0
+
+
+def _perfbench_gen():
+    import importlib.util
+    from pathlib import Path
+
+    path = Path(__file__).resolve().parent.parent / "perfbench" / "gen.py"
+    spec = importlib.util.spec_from_file_location("perfbench_gen", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+# generated inputs whose top-10 revenue holds a total ending in exactly
+# half a cent (13, 33), where a double sum lands a hair either side of it;
+# on 78 Spark's ROUND(SUM(double), 2) and DuckDB's differed by one cent
+@pytest.mark.parametrize("seed", [13, 33, 78])
+def test_shipping_priority_exact_on_generated_inputs(spark, tmp_path, seed):
+    from etl_master_spark.operators.relational import SHIPPING_PRIORITY_ORACLE
+
+    _perfbench_gen().write_sf(tmp_path, seed, "sf0.001")
+    got = QUERIES["shipping_priority"](spark, str(tmp_path)).toPandas()
+    con = duckdb_connect(str(tmp_path))
+    try:
+        want = con.sql(SHIPPING_PRIORITY_ORACLE).df()
+    finally:
+        con.close()
+    assert list(got.columns) == list(want.columns)
+    assert got.to_dict("records") == want.to_dict("records")
